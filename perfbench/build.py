@@ -62,7 +62,7 @@ def spark_jars():
 def sources():
     if not os.path.isdir(ENGINE_SRC):
         raise BuildError(f"engine sources not found at {ENGINE_SRC}")
-    out = []
+    out = [os.path.abspath(__file__)]  # its JVM flags shape the archive
     for top in [ENGINE_SRC, RESOURCES] + BENCH_SRC:
         for d, _, fs in os.walk(top):
             out += [os.path.join(d, f) for f in fs]

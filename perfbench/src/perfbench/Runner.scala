@@ -60,7 +60,6 @@ object Runner {
       tracer.phase("exec")(Out(0L, 0L, run().map(BigInt(_))))
   }
 
-
   /** Files under `dir` modified at or after `sinceMs`. */
   private def filesSince(dir: File, sinceMs: Long): Long =
     Option(dir.listFiles).map(_.map { f =>
