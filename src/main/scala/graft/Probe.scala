@@ -26,13 +26,16 @@ object Probe {
     val abMode = sys.env.contains("SPARK_GRAFT_PROBE_AB")
     // A/B stats only record reps > 2, so the old default of 2 produced a
     // silently empty A/B summary (ADVICE r15); in A/B mode default to 8
-    // (3 warm samples per arm) and refuse fewer than 4.
+    // (3 warm samples per arm) and refuse fewer than 4; an odd count is
+    // rounded up so the mirrored arms get equal cold and warm samples.
     val reps0 = sys.env.get("SPARK_GRAFT_PROBE_REPS").map(_.toInt)
       .getOrElse(if (abMode) 8 else 2)
-    val reps = if (abMode && reps0 < 4) {
-      System.err.println(s"[probe] A/B mode needs >=4 reps (got $reps0); using 4")
-      4
-    } else reps0
+    val reps = if (!abMode) reps0 else {
+      val even = math.max(4, reps0 + (reps0 & 1))
+      if (even != reps0) System.err.println(
+        s"[probe] A/B mode needs an even count >=4 of reps (got $reps0); using $even")
+      even
+    }
     val b0 = SparkSession.builder()
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)

@@ -55,6 +55,18 @@ object Bloom {
       spark.conf.set(bitsKey, bits.toString)
   }
 
+  /** Raise the session caps that [[appendIndex]] / [[buildIndex]] with
+    * these parameters need. Call it on the caller thread before running
+    * an append concurrently with other jobs: the raise is a
+    * read-then-set of session-global conf, and the append's own call
+    * then only reads. */
+  private[graft] def ensureIndexCaps(spark: SparkSession, numBuckets: Int,
+                      expectedItems: Long, fpp: Double): Unit = {
+    val perBucket = math.max(1L, expectedItems / numBuckets)
+    ensureAggCaps(spark, perBucket,
+      BloomFilter.optimalNumOfBits(perBucket, fpp))
+  }
+
   /** Aggregate Column folding `hash` (must be BIGINT, e.g. `xxhash64`)
     * into one Bloom filter blob sized for `expectedItems` at `fpp`.
     * Raises the session's runtime-bloom-filter caps when the requested

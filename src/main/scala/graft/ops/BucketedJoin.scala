@@ -1,8 +1,7 @@
 package graft.ops
 
 import graft.core.ColSpec
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed bin-index layout: amortize the interval-join shuffle across
   * queries.
@@ -27,23 +26,20 @@ import org.apache.spark.sql.functions._
   * `ProjectExec` is alias-aware, so the rename does not hide the bucket
   * distribution from the planner.
   *
-  * The bin-index relation itself is the same closed-form construction as
-  * [[IntervalJoin.Binned]]: one row per (interval, spanned bin) with
-  * point promotion, and the pair emitted only from the bin containing
-  * `max(start1, start2)` — dedup without a `distinct()`.
+  * The bin-index relation is [[IntervalJoin.explodeBins]] and the join
+  * over two of them is [[IntervalJoin.joinBins]] — the kernel of
+  * [[IntervalJoin.Binned]], split at the point where the exploded
+  * relation is stored.
   */
 object BucketedJoin {
 
   val BinCol = "__bin"
 
-  /** The bin-exploded relation of `df`: one row per (interval, spanned
-    * genome bin), bin column [[BinCol]]. Point intervals are promoted to
-    * length 1 first, so a point lands in exactly one bin. */
+  /** The bin-exploded relation of `df` ([[IntervalJoin.explodeBins]]),
+    * bin column [[BinCol]]. */
   def binIndex(df: DataFrame, c: ColSpec = ColSpec.default,
                binSize: Long = IntervalJoin.DefaultBinSize): DataFrame =
-    df.withColumn(BinCol, explode(sequence(
-      IntervalJoin.fdiv(c.startCol, binSize),
-      IntervalJoin.fdiv(c.promotedEnd - 1, binSize))))
+    IntervalJoin.explodeBins(df, c, binSize, BinCol)
 
   /** Materialize `df`'s bin index as a bucketed + sorted external table
     * at `path`, registered as `table` in the session catalog. Both sides
@@ -58,8 +54,7 @@ object BucketedJoin {
                     binColName: String = BinCol): Unit = {
     val s = df.sparkSession
     s.sql(s"DROP TABLE IF EXISTS $table")
-    binIndex(df, c, binSize)
-      .withColumnRenamed(BinCol, binColName)
+    IntervalJoin.explodeBins(df, c, binSize, binColName)
       .write.mode("overwrite")
       .option("path", path)
       .bucketBy(numBuckets, c.chrom, binColName)
@@ -79,17 +74,6 @@ object BucketedJoin {
                         c1: ColSpec, c2: ColSpec,
                         leftBin: String = BinCol, rightBin: String,
                         binSize: Long = IntervalJoin.DefaultBinSize,
-                        on: Seq[(String, String)] = Nil): DataFrame = {
-    val cond = (c1.chromCol === c2.chromCol) &&
-      on.map { case (a, b) => col(a) === col(b) }
-        .foldLeft(col(leftBin) === col(rightBin))(_ && _)
-    left.join(right.hint("SHUFFLE_HASH"), cond, "inner")
-      .filter(IntervalJoin.overlapPredicate(c1, c2))
-      .filter(col(leftBin) === IntervalJoin.fdiv(
-        greatest(c1.startCol, c2.startCol), binSize))
-      .drop(leftBin, rightBin)
-  }
-
-  /** Convenience: read a bin-index table written by [[writeBinIndex]]. */
-  def readBinIndex(s: SparkSession, table: String): DataFrame = s.table(table)
+                        on: Seq[(String, String)] = Nil): DataFrame =
+    IntervalJoin.joinBins(left, right, c1, c2, on, binSize, leftBin, rightBin)
 }

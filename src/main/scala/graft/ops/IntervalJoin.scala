@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.core.ColSpec
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 
 /** Physical strategies for the interval (range-overlap) join — the one
@@ -17,7 +18,10 @@ import org.apache.spark.sql.functions._
   *    a `distinct()` shuffle. Both sides shuffle-partition by `(chrom, bin)`,
   *    which simultaneously parallelizes within chromosomes and defuses
   *    per-chromosome skew (chr1 >> chrM; see SURVEY §4). AQE handles any
-  *    residual skew.
+  *    residual skew. The bin layout exists once, as [[explodeBins]] +
+  *    [[joinBins]]: [[Binned]] is one such join, [[BinnedTwoLevel]] a
+  *    union of three at two widths, and [[BucketedJoin]] stores the
+  *    exploded relation and joins it later with the same [[joinBins]].
   *  - '''Broadcast''': when one side is small (views, chromsizes, dimension
   *    tables), hash-join on `(chrom, on...)` with the range predicate in the
   *    join condition — no shuffle of the big side at all.
@@ -28,8 +32,7 @@ import org.apache.spark.sql.functions._
 object IntervalJoin {
 
   sealed trait Strategy
-  /** Pick broadcast if the right side's estimated plan size is under the
-    * session's autoBroadcastJoinThreshold, else binned. */
+  /** Resolve from plan statistics and the span probe ([[resolveAuto]]). */
   case object Auto extends Strategy
   case object Binned extends Strategy
   /** Two-level binning for mixed-length relations: an interval of span s
@@ -57,25 +60,40 @@ object IntervalJoin {
   val ProbeThresholdKey = "spark.graft.join.probeThresholdBytes"
   val DefaultProbeThresholdBytes: Long = 256L << 20
 
-  /** Span quantiles (p50, p99) over a bounded prefix sample — ONE probe
-    * job serving both the [[Auto]] heavy-tail decision and the adaptive
-    * coarse width ([[adaptiveCoarse]]). Bounded: reads at most `maxRows`
-    * rows of two columns. */
+  /** Span quantiles (p50, p99) over a Bernoulli sample of about
+    * `maxRows` rows, its fraction sized from the optimizer's row estimate
+    * — ONE probe job serving both the [[Auto]] heavy-tail decision and
+    * the adaptive coarse width ([[adaptiveCoarse]]). A sample, not a
+    * prefix: on position-sorted input a prefix sees only the first
+    * chromosome's rows, and a tail that sits further on goes unseen. */
   def spanQuantiles(df: DataFrame, c: ColSpec,
                     maxRows: Int = 100000): Option[(Double, Double)] = {
-    val q = df.select((c.promotedEnd - c.startCol).cast("double").as("__span"))
-      .limit(maxRows)
+    val plan = df.queryExecution.optimizedPlan
+    val rows = plan.stats.rowCount.getOrElse(
+      plan.stats.sizeInBytes / EstimationUtils.getSizePerRow(plan.output))
+    val fraction = maxRows / math.max(rows.toDouble, 1.0)
+    val spans = df.select((c.promotedEnd - c.startCol).cast("double").as("__span"))
+    val q = (if (fraction < 1.0) spans.sample(fraction, seed = 0L) else spans)
       .stat.approxQuantile("__span", Array(0.5, 0.99), 0.1)
     if (q.length >= 2) Some((q(0), q(1))) else None
   }
 
-  /** Span-tail probe for [[Auto]]: approximate p99 interval span over a
-    * bounded prefix sample. A p99 beyond the two-level long-interval cut
-    * (8*binSize) means [[Binned]] would explode the tail onto >8 fine
-    * bins per row — the regime [[BinnedTwoLevel]] exists for. */
-  def spanTailIsHeavy(df: DataFrame, c: ColSpec, binSize: Long,
-                      maxRows: Int = 100000): Boolean =
-    spanQuantiles(df, c, maxRows).exists(_._2 > (binSize * 8).toDouble)
+  /** The heavy-tail decision shared by [[Auto]] and `Ops.coverage`:
+    * `Some((p50, p99))` when `df` is KNOWN-large — optimizer estimate at
+    * or above [[ProbeThresholdKey]], but not the unknown-stats
+    * Long.MaxValue default that mapPartitions barriers report — and its
+    * p99 span exceeds the two-level long cut (8*binSize), where [[Binned]]
+    * would explode the tail onto many fine bins per row. Below the
+    * threshold the probe isn't worth a job. */
+  def heavySpanTail(df: DataFrame, c: ColSpec,
+                    binSize: Long): Option[(Double, Double)] = {
+    val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val threshold = BigInt(df.sparkSession.conf
+      .get(ProbeThresholdKey, DefaultProbeThresholdBytes.toString).toLong)
+    if (sz >= threshold && sz < BigInt(Long.MaxValue) / 4)
+      spanQuantiles(df, c).filter(_._2 > (binSize * 8).toDouble)
+    else None
+  }
 
   /** Coarse-bin width for the two-level join's long-class joins, sized to
     * the measured span distribution instead of the fixed 64*binSize
@@ -101,10 +119,6 @@ object IntervalJoin {
     math.min(legacy, math.max(floor, pow2))
   }
 
-  /** Integer floor-division that is exact for negative coordinates. */
-  private[ops] def fdiv(c: Column, w: Long): Column =
-    ((c - pmod(c, lit(w))) / lit(w)).cast("long")
-
   /** The overlap predicate with point promotion, on already-suffixed specs. */
   def overlapPredicate(c1: ColSpec, c2: ColSpec): Column =
     c1.startCol < c2.promotedEnd && c2.startCol < c1.promotedEnd
@@ -117,11 +131,9 @@ object IntervalJoin {
     *    cost O(|L| * |R| / nChrom), catastrophic for a non-tiny right side
     *    (observed 650s vs 15s at 600k x 150k). Hard few-thousand-row cap
     *    regardless of the session broadcast threshold.
-    *  - a KNOWN-large side (optimizer estimate above
-    *    [[ProbeThresholdKey]], but not the unknown-stats Long.MaxValue
-    *    default that mapPartitions barriers report) with a heavy span
-    *    tail ([[spanTailIsHeavy]]) -> [[BinnedTwoLevel]]: megabase-scale
-    *    intervals would explode onto many fine bins under [[Binned]].
+    *  - a side with a heavy span tail ([[heavySpanTail]]) ->
+    *    [[BinnedTwoLevel]]: megabase-scale intervals would explode onto
+    *    many fine bins under [[Binned]].
     *  - everything else -> [[Binned]], whose cost tracks the true pair
     *    count. */
   def resolveAuto(left: DataFrame, right: DataFrame,
@@ -140,22 +152,44 @@ object IntervalJoin {
     val legacyCoarse = binSize * 64
     val szR = right.queryExecution.optimizedPlan.stats.sizeInBytes
     if (szR <= cap) (BroadcastRight, legacyCoarse)
-    else {
-      val threshold = BigInt(left.sparkSession.conf
-        .get(ProbeThresholdKey, DefaultProbeThresholdBytes.toString).toLong)
-      val unknown = BigInt(Long.MaxValue) / 4
-      def knownLargeHeavy(df: DataFrame, c: ColSpec): Option[(Double, Double)] = {
-        val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        if (sz >= threshold && sz < unknown)
-          spanQuantiles(df, c).filter(_._2 > (binSize * 8).toDouble)
-        else None
-      }
-      knownLargeHeavy(left, c1).orElse(knownLargeHeavy(right, c2)) match {
+    else heavySpanTail(left, c1, binSize)
+      .orElse(heavySpanTail(right, c2, binSize)) match {
         case Some((p50, p99)) =>
           (BinnedTwoLevel, adaptiveCoarse(binSize, p50, p99))
         case None => (Binned, legacyCoarse)
       }
-    }
+  }
+
+  /** Equal `chrom` and `on` keys, and `cond`. */
+  private def keysAnd(c1: ColSpec, c2: ColSpec, on: Seq[(String, String)],
+                      cond: Column): Column =
+    (c1.chromCol === c2.chromCol) &&
+      on.map { case (a, b) => col(a) === col(b) }.foldLeft(cond)(_ && _)
+
+  /** `df` with one row per bin of width `w` that its point-promoted span
+    * touches — bins `start/w` through `(promotedEnd-1)/w` by
+    * [[Scan.bucketOf]] — the bin id in `binCol`. The one bin layout of
+    * [[Binned]], [[BinnedTwoLevel]] and [[BucketedJoin]]. */
+  def explodeBins(df: DataFrame, c: ColSpec, w: Long,
+                  binCol: String): DataFrame =
+    df.withColumn(binCol, explode(sequence(Scan.bucketOf(c.startCol, w),
+      Scan.bucketOf(c.promotedEnd - 1, w))))
+
+  /** Overlap pairs of two relations exploded by [[explodeBins]] at width
+    * `w`: shuffle-hash equi-join on `(chrom, on..., bin)`, re-check the
+    * overlap predicate, and emit each pair only from the bin holding
+    * `max(start1, start2)` — exactly once, without a distinct() shuffle.
+    * A hash map of the right side is built per bin partition instead of
+    * sort-merge: with heavily duplicated bin keys SMJ degenerates into a
+    * buffered nested loop (measured 20x slower at 112M output pairs). */
+  def joinBins(lb: DataFrame, rb: DataFrame, c1: ColSpec, c2: ColSpec,
+               on: Seq[(String, String)], w: Long,
+               lBin: String, rBin: String): DataFrame = {
+    lb.join(rb.hint("SHUFFLE_HASH"),
+        keysAnd(c1, c2, on, col(lBin) === col(rBin)), "inner")
+      .filter(overlapPredicate(c1, c2))
+      .filter(col(lBin) === Scan.bucketOf(greatest(c1.startCol, c2.startCol), w))
+      .drop(lBin, rBin)
   }
 
   /** Inner interval join of two relations whose column names are already
@@ -173,64 +207,23 @@ object IntervalJoin {
       case Auto => resolveAutoPlan(left, right, c1, c2, binSize)
       case s => (s, binSize * 64)
     }
+    def binned(l: DataFrame, r: DataFrame, w: Long) =
+      joinBins(explodeBins(l, c1, w, "__bin"), explodeBins(r, c2, w, "__bin2"),
+        c1, c2, on, w, "__bin", "__bin2")
     resolved match {
       case BroadcastRight | Auto =>
-        val cond = (c1.chromCol === c2.chromCol) &&
-          on.map { case (a, b) => col(a) === col(b) }
-            .foldLeft(overlapPredicate(c1, c2))(_ && _)
-        left.join(broadcast(right), cond, "inner")
+        left.join(broadcast(right),
+          keysAnd(c1, c2, on, overlapPredicate(c1, c2)), "inner")
+      case Binned => binned(left, right, binSize)
       case BinnedTwoLevel =>
-        val coarse = autoCoarse
-        val longCap = binSize * 8
-        def isLong(c: ColSpec) = (c.promotedEnd - c.startCol) > lit(longCap)
-        def bins(c: ColSpec, w: Long) =
-          sequence(fdiv(c.startCol, w), fdiv(c.promotedEnd - 1, w))
-        def cond0 = (c1.chromCol === c2.chromCol) &&
-          on.map { case (a, b) => col(a) === col(b) }
-            .foldLeft(col("__bin") === col("__bin2"))(_ && _)
-        def classJoin(lSide: DataFrame, rSide: DataFrame, w: Long) =
-          lSide.withColumn("__bin", explode(bins(c1, w)))
-            .join(rSide.withColumn("__bin2", explode(bins(c2, w)))
-              .hint("SHUFFLE_HASH"), cond0, "inner")
-            .filter(overlapPredicate(c1, c2))
-            // emit each pair only from this level's bin holding the
-            // overlap's start — dedup without a distinct() shuffle
-            .filter(col("__bin") ===
-              fdiv(greatest(c1.startCol, c2.startCol), w))
-            .drop("__bin", "__bin2")
+        def isLong(c: ColSpec) = (c.promotedEnd - c.startCol) > lit(binSize * 8)
         val lShort = left.filter(!isLong(c1))
-        val lLong = left.filter(isLong(c1))
         val rShort = right.filter(!isLong(c2))
-        val rLong = right.filter(isLong(c2))
         // three class-disjoint joins: short x short fine, long x all and
         // short x long coarse (shorts span <= coarse width -> <= 2 bins)
-        classJoin(lShort, rShort, binSize)
-          .unionByName(classJoin(lLong, right, coarse))
-          .unionByName(classJoin(lShort, rLong, coarse))
-      case Binned =>
-        val lb = left.withColumn(
-          "__bin",
-          explode(sequence(fdiv(c1.startCol, binSize),
-                           fdiv(c1.promotedEnd - 1, binSize))))
-        // Build a hash map of the (smaller) right side per partition
-        // instead of sort-merge: with heavily duplicated (chrom, bin) keys
-        // SMJ degenerates into a buffered nested loop (measured 20x slower
-        // at 112M output pairs). SHJ streams the probe side; the build
-        // side is one bin-partition of the smaller relation.
-        val rb = right.withColumn(
-          "__bin2",
-          explode(sequence(fdiv(c2.startCol, binSize),
-                           fdiv(c2.promotedEnd - 1, binSize))))
-          .hint("SHUFFLE_HASH")
-        val cond = (c1.chromCol === c2.chromCol) &&
-          on.map { case (a, b) => col(a) === col(b) }
-            .foldLeft(col("__bin") === col("__bin2"))(_ && _)
-        lb.join(rb, cond, "inner")
-          .filter(overlapPredicate(c1, c2))
-          // emit each pair only from the bin holding the overlap's start —
-          // dedup without a distinct() shuffle
-          .filter(col("__bin") === fdiv(greatest(c1.startCol, c2.startCol), binSize))
-          .drop("__bin", "__bin2")
+        binned(lShort, rShort, binSize)
+          .unionByName(binned(left.filter(isLong(c1)), right, autoCoarse))
+          .unionByName(binned(lShort, right.filter(isLong(c2)), autoCoarse))
     }
   }
 }

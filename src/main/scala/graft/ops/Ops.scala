@@ -52,6 +52,30 @@ object Ops {
     df.filter(cols.chromCol.isNotNull && cols.startCol.isNotNull &&
       cols.endCol.isNotNull)
 
+  /** Rows of `side` (unique on `idCol`) that overlap no row of `other` —
+    * the unmatched branch of [[overlap]] and the whole of [[setdiff]].
+    * The anti-join runs against the MERGED other side, not the raw one:
+    * after point promotion merge(0) runs are gap-free unions of their
+    * members, so overlap-exists against the runs equals overlap-exists
+    * against the members — and merged genomic relations are typically
+    * orders of magnitude smaller, so the branch costs one merge shuffle
+    * instead of a second full pair join. Promotion must happen BEFORE the
+    * merge: otherwise a point [e,e) abutting a run [s,e) is absorbed and
+    * its promoted reach [e,e+1) is lost, spuriously keeping rows that
+    * start exactly at e. `on` names `other`'s keys; `side` carries them
+    * with `sideSfx` appended. */
+  private def unmatched(side: DataFrame, idCol: String, cSide: ColSpec,
+      sideSfx: String, other: DataFrame, cOther: ColSpec, on: Seq[String],
+      strategy: Strategy, binSize: Long): DataFrame = {
+    val msfx = "__m_"
+    val runs = ColSpec.suffixAll(
+      merge(promotePoints(concreteRows(other, cOther), cOther), Some(0), on,
+        cOther).drop("n_intervals"), msfx)
+    val p = IntervalJoin.pairs(side, runs, cSide, cOther.withSuffix(msfx),
+      on.map(k => (k + sideSfx, k + msfx)), strategy, binSize)
+    side.join(p.select(col(idCol)), Seq(idCol), "left_anti")
+  }
+
   // ---------------------------------------------------------------- select
 
   /** Rows overlapping a scalar region (reference `ops.py:116-147`); the
@@ -218,32 +242,11 @@ object Ops {
       oNames.map(n => lit(null).cast(LongType).as(n))
     val lNulls = nullCols(l.schema)
 
-    // Unmatched-row detection runs against the MERGED other side, not the
-    // raw one: after point promotion (end -> start+1, below) merge(0) runs
-    // are gap-free unions of their members, so overlap-exists against the
-    // runs equals overlap-exists against the members — and merged genomic
-    // relations are typically orders of magnitude smaller, so the anti
-    // branch costs one merge shuffle instead of a second full pair join.
-    // Promotion must happen BEFORE the merge: otherwise a point [e,e)
-    // abutting a run [s,e) is absorbed and its promoted reach [e,e+1) is
-    // lost, spuriously null-extending rows that start exactly at e.
-    def existsPairs(side: DataFrame, cSide: ColSpec, sideSfx: String,
-                    other: DataFrame, cOther: ColSpec,
-                    otherOn: Seq[String]): DataFrame = {
-      val msfx = "__m_"
-      val m = ColSpec.suffixAll(
-        Ops.merge(promotePoints(concreteRows(other, cOther), cOther),
-          Some(0), otherOn, cOther).drop("n_intervals"), msfx)
-      IntervalJoin.pairs(side, m, cSide, cOther.withSuffix(msfx),
-        otherOn.map(k => (k + sideSfx, k + msfx)), strategy, binSize)
-    }
     val leftRest = () =>
-      l.join(existsPairs(l, c1, sf1, df2, cols2, on).select(col("__id1")),
-          Seq("__id1"), "left_anti")
+      unmatched(l, "__id1", c1, sf1, df2, cols2, on, strategy, binSize)
         .select(lNames.map(col) ++ rNulls: _*)
     val rightRest = () =>
-      r.join(existsPairs(r, c2, sf2, df1, cols1, on).select(col("__id2")),
-          Seq("__id2"), "left_anti")
+      unmatched(r, "__id2", c2, sf2, df1, cols1, on, strategy, binSize)
         .select(lNulls ++ rNames.map(col) ++
           oNames.map(n => lit(null).cast(LongType).as(n)): _*)
     val pOrdered = p.select((lNames ++ rNames ++ oNames).map(col): _*)
@@ -303,7 +306,7 @@ object Ops {
     val idType = p.schema(idCol).dataType
     // ONE event list, ONE sort: every probe contributes both boundary
     // rows, every annotation a start row and an end row, and the two
-    // running counters ride the same Window ([[Scan.prefixSum2]]).
+    // running counters ride the same Window ([[Scan.prefixSumN]]).
     // The tag encodes every boundary-equality rule at a shared
     // coordinate: ann ends (0) before probe starts (1) -> end' <= start
     // is inclusive; probe ends (2) before ann starts (3) -> start <
@@ -326,8 +329,8 @@ object Ops {
     // the probe-end row reads the start counter, the probe-start row
     // subtracts the end counter; one groupBy on the content id combines
     // the pair of boundary rows
-    Scan.prefixSum2(ev, grp, "__bkt", Seq(col("__pos"), col("__tag")),
-        col("__vs"), col("__ve"), "__runS", "__runE")
+    Scan.prefixSumN(ev, grp, "__bkt", Seq(col("__pos"), col("__tag")),
+        Seq(col("__vs") -> "__runS", col("__ve") -> "__runE"))
       .filter(col(idCol).isNotNull)
       .groupBy(col(idCol))
       .agg(sum(when(col("__tag") === 2, col("__runS"))
@@ -338,10 +341,9 @@ object Ops {
     * `ops.py:1371-1438`). Counts are computed on the DISTINCT probe set
     * (full-duplicate df1 rows have identical counts) by
     * [[overlapCountsByRank]] — no pair enumeration — then fanned back out
-    * to every copy by content id. `strategy` is retained for signature
-    * stability; the rank path has no join-strategy choice. `binSize`
-    * doubles as the scan's coordinate bucket width. `returnInput=false`
-    * keeps only the count column (reference `ops.py:1427-1434`,
+    * to every copy by content id. `binSize` is the scan's coordinate
+    * bucket width. `returnInput=false` keeps only the count column
+    * (reference `ops.py:1427-1434`,
     * `tests/test_ops.py:2057-2069`); row order is whatever the plan
     * produces, so callers who need alignment keep the input. */
   def countOverlaps(df1: DataFrame, df2: DataFrame,
@@ -350,7 +352,6 @@ object Ops {
                     returnInput: Boolean = true,
                     cols1: ColSpec = ColSpec.default,
                     cols2: ColSpec = ColSpec.default,
-                    strategy: Strategy = Auto,
                     binSize: Long = IntervalJoin.DefaultBinSize): DataFrame = {
     val l = RowId.withContentId(df1, "__id1")
     val lDist = l
@@ -376,17 +377,8 @@ object Ops {
               cols2: ColSpec = ColSpec.default,
               strategy: Strategy = Auto,
               binSize: Long = IntervalJoin.DefaultBinSize): DataFrame = {
-    val l = RowId.withContentId(df1, "__id1")
-    val sfx = "__r_"
-    // anti-join against the merged, point-promoted df2 — exact for
-    // overlap-EXISTS and far smaller than the raw pair relation (see
-    // overlap's unmatched branch for why promotion precedes the merge)
-    val r = ColSpec.suffixAll(
-      merge(promotePoints(concreteRows(df2, cols2), cols2), Some(0), on, cols2)
-        .drop("n_intervals"), sfx)
-    val p = IntervalJoin.pairs(l, r, cols1, cols2.withSuffix(sfx),
-      on.map(k => (k, k + sfx)), strategy, binSize)
-    l.join(p.select(col("__id1")), Seq("__id1"), "left_anti").drop("__id1")
+    unmatched(RowId.withContentId(df1, "__id1"), "__id1", cols1, "",
+      df2, cols2, on, strategy, binSize).drop("__id1")
   }
 
   // ------------------------------------------------------- cluster / merge
@@ -591,9 +583,11 @@ object Ops {
     * overlapping df2 rows don't double-count (reference `ops.py:842-916`,
     * merge at `ops.py:888`).
     *
-    * Adaptive physical path ([[coveredBp]]): a binned pair join against
-    * the disjoint merged runs for narrow probes, or — for a known-large
-    * probe relation with a heavy span tail — a pair-FREE rank scan:
+    * Adaptive physical path ([[coveredBp]]): a pair join
+    * ([[IntervalJoin.pairs]]) against the disjoint merged runs for
+    * narrow probes, or — for a probe relation with a heavy span tail,
+    * decided by [[IntervalJoin.heavySpanTail]] like the join's own
+    * [[IntervalJoin.Auto]] — a pair-FREE rank scan:
     * `covered(probe) = F(probe_end) − F(probe_start)` where `F(x)` (total
     * covered bp below x) decomposes into three running counters over one
     * sorted event list (`F(x) = closedLen(x) + x*openCount(x) −
@@ -607,15 +601,14 @@ object Ops {
                cols1: ColSpec = ColSpec.default,
                cols2: ColSpec = ColSpec.default,
                strategy: Strategy = Auto,
-               binSize: Long = IntervalJoin.DefaultBinSize,
-               rankScan: Option[Boolean] = None): DataFrame = {
+               binSize: Long = IntervalJoin.DefaultBinSize): DataFrame = {
     // distinct-probe aggregation + fan-out, as in countOverlaps: covered
     // bp is identical for full-duplicate rows
     val l = RowId.withContentId(df1, "__id1")
     val lDist = l.select(cols1.names.map(col) :+ col("__id1"): _*)
       .dropDuplicates("__id1")
     val covered = coveredBp(lDist, "__id1", df2, coverageCol,
-      cols1, cols2, binSize, rankScan, strategy)
+      cols1, cols2, binSize, strategy)
     l.join(covered.withColumnRenamed("__id1", "__cid").hint("shuffle_hash"),
         col("__id1") === col("__cid"), "left")
       .withColumn(coverageCol, coalesce(col(coverageCol), lit(0L)))
@@ -632,33 +625,22 @@ object Ops {
     *    where BOTH the bin replication and the per-probe run fanout
     *    explode — there the rank scan's cost, linear in rows and
     *    independent of fanout, wins asymptotically.
-    * `rankScan = None` decides like [[IntervalJoin.resolveAuto]]: pay a
-    * bounded span-tail probe only on a known-large probe relation
-    * (optimizer estimate above the same conf threshold), and switch to
-    * the scan when the p99 probe span crosses the two-level cut. */
+    * The scan runs when [[IntervalJoin.heavySpanTail]] finds the probes'
+    * p99 span past the two-level cut — the same decision, and the same
+    * conf threshold, as the join's [[IntervalJoin.Auto]]. */
   private[ops] def coveredBp(probes: DataFrame, idCol: String,
       anns: DataFrame, outCol: String, cols1: ColSpec, cols2: ColSpec,
-      bucketWidth: Long, rankScan: Option[Boolean] = None,
-      strategy: Strategy = Auto): DataFrame = {
-    val useScan = rankScan.getOrElse {
-      val sz = probes.queryExecution.optimizedPlan.stats.sizeInBytes
-      val threshold = BigInt(probes.sparkSession.conf
-        .get(IntervalJoin.ProbeThresholdKey,
-          IntervalJoin.DefaultProbeThresholdBytes.toString).toLong)
-      sz >= threshold && sz < BigInt(Long.MaxValue) / 4 &&
-        IntervalJoin.spanTailIsHeavy(probes, cols1, bucketWidth)
-    }
-    if (useScan) coveredBpByRank(probes, idCol, anns, outCol, cols1, cols2,
-      bucketWidth)
+      bucketWidth: Long, strategy: Strategy = Auto): DataFrame =
+    if (IntervalJoin.heavySpanTail(probes, cols1, bucketWidth).isDefined)
+      coveredBpByRank(probes, idCol, anns, outCol, cols1, cols2, bucketWidth)
     else coveredBpByPairs(probes, idCol, anns, outCol, cols1, cols2,
       bucketWidth, strategy)
-  }
 
   /** Pair-join covered-bp: binned join of distinct probes against the
     * merged (disjoint) runs, clip-sum per probe. Fanout = runs spanned
     * per probe — small for narrow probes, the reason this path wins the
     * common regime. */
-  private def coveredBpByPairs(probes: DataFrame, idCol: String,
+  private[graft] def coveredBpByPairs(probes: DataFrame, idCol: String,
       anns: DataFrame, outCol: String, cols1: ColSpec, cols2: ColSpec,
       binSize: Long, strategy: Strategy): DataFrame = {
     val sfx = "__r_"
@@ -678,7 +660,7 @@ object Ops {
     * probe via one three-counter prefix scan. Returns (probe id, covered
     * bp) for concrete probes; rows of `probes` are assumed distinct on
     * `idCol`. */
-  private[ops] def coveredBpByRank(probes: DataFrame, idCol: String,
+  private[graft] def coveredBpByRank(probes: DataFrame, idCol: String,
       anns: DataFrame, outCol: String, cols1: ColSpec, cols2: ColSpec,
       bucketWidth: Long): DataFrame = {
     val merged = merge(concreteRows(anns, cols2), Some(0), Nil, cols2)

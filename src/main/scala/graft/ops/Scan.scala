@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
   *  3. combine: running = local-within-bucket ⊕ carry.
   *
   * Correct because the bucket id is monotone in the order key, so "prior
-  * buckets" is exactly "prior rows outside my bucket". Used by [[Closest]]
+  * buckets" is exactly "prior rows outside my bucket". One implementation
+  * (`twoLevel`) serves every running aggregate: [[prefixSum]],
+  * [[prefixMax]] and [[prefixSumN]]. Used by [[Closest]]
   * (sequence numbering + as-of positions), [[Ops.cluster]], and
   * `Extras.pileup`/`markRuns`.
   *
@@ -38,34 +40,47 @@ import org.apache.spark.sql.functions._
   */
 object Scan {
 
-  /** Floor-division bucket id, exact for negative coordinates. */
+  /** Floor-division bucket id, exact for negative coordinates — the
+    * engine's one floor division (scan buckets, join bins, stream bins). */
   def bucketOf(key: Column, width: Long): Column =
     ((key - pmod(key, lit(width))) / lit(width)).cast("long")
 
+  /** The one two-level scan: for each `(value, outCol)`, `outCol` =
+    * SUM or MAX(value) OVER (PARTITION BY group ORDER BY order ROWS
+    * UNBOUNDED PRECEDING AND CURRENT ROW, or AND 1 PRECEDING when not
+    * `inclusive`). All values share one local WindowSpec and one bucket
+    * summary, so Catalyst plans a single Window operator over a single
+    * sort whatever the number of values. Sums read 0 and maxima null over
+    * an empty frame. */
   private def twoLevel(df: DataFrame, group: Seq[String], bucketCol: String,
-                       order: Seq[Column], value: Column, isMax: Boolean,
-                       inclusive: Boolean, outCol: String): DataFrame = {
+                       order: Seq[Column], values: Seq[(Column, String)],
+                       isMax: Boolean, inclusive: Boolean): DataFrame = {
     val partKeys = group :+ bucketCol
     def aggFn(c: Column) = if (isMax) max(c) else sum(c)
     val wLocal = Window.partitionBy(partKeys.map(col): _*)
       .orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, if (inclusive) 0 else -1)
-    val withLocal = df.withColumn("__tl_local", aggFn(value).over(wLocal))
+    val idx = values.indices
+    val withLocal = idx.foldLeft(df) { (d, i) =>
+      d.withColumn(s"__tl_l$i", aggFn(values(i)._1).over(wLocal))
+    }
     val summary = df.groupBy(partKeys.map(col): _*)
-      .agg(aggFn(value).as("__tl_btot"))
+      .agg(aggFn(values.head._1).as("__tl_b0"),
+        values.tail.zipWithIndex.map { case ((v, _), i) =>
+          aggFn(v).as(s"__tl_b${i + 1}")
+        }: _*)
     val wCarry = Window.partitionBy(group.map(col): _*)
       .orderBy(col(bucketCol))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = summary
-      .withColumn("__tl_carry", aggFn(col("__tl_btot")).over(wCarry))
-      .drop("__tl_btot")
-    val combined =
-      if (isMax) greatest(col("__tl_local"), col("__tl_carry"))
-      else coalesce(col("__tl_local"), lit(0L)) +
-        coalesce(col("__tl_carry"), lit(0L))
-    withLocal.join(broadcast(carry), partKeys, "left")
-      .withColumn(outCol, combined)
-      .drop("__tl_local", "__tl_carry")
+    val carry = idx.foldLeft(summary) { (d, i) =>
+      d.withColumn(s"__tl_c$i", aggFn(col(s"__tl_b$i")).over(wCarry))
+    }.drop(idx.map(i => s"__tl_b$i"): _*)
+    def combined(local: Column, carried: Column) =
+      if (isMax) greatest(local, carried)
+      else coalesce(local, lit(0L)) + coalesce(carried, lit(0L))
+    idx.foldLeft(withLocal.join(broadcast(carry), partKeys, "left")) { (d, i) =>
+      d.withColumn(values(i)._2, combined(col(s"__tl_l$i"), col(s"__tl_c$i")))
+    }.drop(idx.flatMap(i => Seq(s"__tl_l$i", s"__tl_c$i")): _*)
   }
 
   /** `outCol` = SUM(value) OVER (PARTITION BY group ORDER BY order ROWS
@@ -74,56 +89,23 @@ object Scan {
   def prefixSum(df: DataFrame, group: Seq[String], bucketCol: String,
                 order: Seq[Column], value: Column, inclusive: Boolean,
                 outCol: String): DataFrame =
-    twoLevel(df, group, bucketCol, order, value, isMax = false, inclusive,
-      outCol)
+    twoLevel(df, group, bucketCol, order, Seq(value -> outCol),
+      isMax = false, inclusive)
 
   /** `outCol` = MAX(value) OVER (same frame); null over an empty frame. */
   def prefixMax(df: DataFrame, group: Seq[String], bucketCol: String,
                 order: Seq[Column], value: Column, inclusive: Boolean,
                 outCol: String): DataFrame =
-    twoLevel(df, group, bucketCol, order, value, isMax = true, inclusive,
-      outCol)
+    twoLevel(df, group, bucketCol, order, Seq(value -> outCol),
+      isMax = true, inclusive)
 
-  /** N running sums over the SAME frame in one pass: all window
-    * expressions share one WindowSpec, so Catalyst plans a single Window
-    * operator over a single sort — 1/N the shuffle/sort cost of calling
-    * [[prefixSum]] N times. Zeros (not nulls) over an empty frame. */
+  /** N inclusive running sums over the SAME frame in one pass — 1/N the
+    * shuffle/sort cost of calling [[prefixSum]] N times. */
   def prefixSumN(df: DataFrame, group: Seq[String], bucketCol: String,
                  order: Seq[Column],
-                 values: Seq[(Column, String)]): DataFrame = {
-    val partKeys = group :+ bucketCol
-    val wLocal = Window.partitionBy(partKeys.map(col): _*)
-      .orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val idx = values.indices
-    val withLocal = idx.foldLeft(df) { (d, i) =>
-      d.withColumn(s"__tl_l$i", sum(values(i)._1).over(wLocal))
-    }
-    val summary = df.groupBy(partKeys.map(col): _*)
-      .agg(sum(values.head._1).as("__tl_b0"),
-        values.tail.zipWithIndex.map { case ((v, _), i) =>
-          sum(v).as(s"__tl_b${i + 1}")
-        }: _*)
-    val wCarry = Window.partitionBy(group.map(col): _*)
-      .orderBy(col(bucketCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = idx.foldLeft(summary) { (d, i) =>
-      d.withColumn(s"__tl_c$i", sum(col(s"__tl_b$i")).over(wCarry))
-    }.drop(idx.map(i => s"__tl_b$i"): _*)
-    val out = idx.foldLeft(
-      withLocal.join(broadcast(carry), partKeys, "left")) { (d, i) =>
-      d.withColumn(values(i)._2, coalesce(col(s"__tl_l$i"), lit(0L)) +
-        coalesce(col(s"__tl_c$i"), lit(0L)))
-    }
-    out.drop(idx.flatMap(i => Seq(s"__tl_l$i", s"__tl_c$i")): _*)
-  }
-
-  /** Two-counter convenience over [[prefixSumN]]. */
-  def prefixSum2(df: DataFrame, group: Seq[String], bucketCol: String,
-                 order: Seq[Column], value1: Column, value2: Column,
-                 outCol1: String, outCol2: String): DataFrame =
-    prefixSumN(df, group, bucketCol, order,
-      Seq(value1 -> outCol1, value2 -> outCol2))
+                 values: Seq[(Column, String)]): DataFrame =
+    twoLevel(df, group, bucketCol, order, values, isMax = false,
+      inclusive = true)
 
   /** `outCol` = LEAD(posCol) OVER (PARTITION BY group ORDER BY posCol),
     * bucket-parallel: lead within the bucket, stitched with the next

@@ -31,6 +31,9 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * bin (plus whatever equi-keys the user already wrote), re-check the
   * original predicate, and keep each pair only in the bin containing
   * `max(start1, start2)` — exactly-once emission with no `distinct()`.
+  * This Expression-level copy of `IntervalJoin.explodeBins`/`joinBins`
+  * exists because Column code cannot run inside an optimizer rule;
+  * `JoinPropertySpec` holds both to the same brute force.
   *
   * Matched shapes (conjuncts in any order, `<` or `<=`, either
   * direction):

@@ -29,9 +29,7 @@ object StreamOps {
   /** Streaming bin assignment: stateless — each interval tagged with its
     * genome bin, ready for downstream stateful merge keyed by (chrom,bin). */
   def assignBins(intervals: DataFrame, binSize: Long): DataFrame =
-    intervals.withColumn("bin",
-      ((col("start") - pmod(col("start"), lit(binSize))) / lit(binSize))
-        .cast("long"))
+    intervals.withColumn("bin", graft.ops.Scan.bucketOf(col("start"), binSize))
 
   case class Iv(chrom: String, start: Long, end: Long)
   case class MergedRun(chrom: String, start: Long, end: Long, nIntervals: Long)
@@ -256,6 +254,26 @@ object StreamOps {
       .map(_.getPath.toString)
   }
 
+  /** Run the independent writers of an ingest tail: inline when there is
+    * at most one, else each on its own thread. Every failure surfaces:
+    * the first is thrown with the others attached as suppressed. */
+  private[graft] def runTail(tail: Seq[() => Unit]): Unit =
+    if (tail.size <= 1) tail.foreach(f => f())
+    else {
+      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = tail.map { f =>
+        val t = new Thread(() =>
+          try f() catch { case e: Throwable => errs.add(e); () })
+        t.start(); t
+      }
+      threads.foreach(_.join())
+      val first = errs.poll()
+      if (first != null) {
+        errs.forEach(e => first.addSuppressed(e))
+        throw first
+      }
+    }
+
   /** One micro-batch of [[streamingIngestDedup]], exposed so the replay
     * contract is directly testable (call it twice with the same
     * `batchId` — the second call must be a no-op for the store and the
@@ -363,17 +381,11 @@ object StreamOps {
           graft.dedup.Bloom.appendIndex(fresh, col(textCol),
             p, bloomBuckets, bloomExpectedItems, bloomFpp))
       ).flatten
-      if (tail.size <= 1) tail.foreach(f => f())
-      else {
-        val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-        val threads = tail.map { f =>
-          val t = new Thread(() =>
-            try f() catch { case e: Throwable => errs.add(e); () })
-          t.start(); t
-        }
-        threads.foreach(_.join())
-        if (!errs.isEmpty) throw errs.peek()
-      }
+      // the bloom append raises session caps: do it here, not on a tail
+      // thread, so no worker mutates conf the sibling jobs plan against
+      if (bloomIndexPath != null) graft.dedup.Bloom.ensureIndexCaps(s,
+        bloomBuckets, bloomExpectedItems, bloomFpp)
+      runTail(tail)
       if (bloomIndexPath != null) {
         fresh.unpersist()
         ()

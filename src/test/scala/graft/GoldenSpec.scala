@@ -349,6 +349,20 @@ class GoldenSpec extends SparkSpec {
     } finally spark.conf.unset(IntervalJoin.ProbeThresholdKey)
   }
 
+  test("spanQuantiles is order-robust: on sorted input whose long " +
+    "intervals all follow the first maxRows rows, p99 still clears the " +
+    "two-level cut") {
+    val (maxRows, binSize) = (1000, 16L)
+    // 4000 position-sorted rows; only the last quarter is long (100x the
+    // 8*binSize cut), so a maxRows prefix would see short spans only
+    val sorted = (0 until 4000).map { i =>
+      val len = if (i < 3000) 10L else binSize * 8 * 100
+      ("chr1", i * 10L, i * 10L + len)
+    }.toDF("chrom", "start", "end")
+    val q = IntervalJoin.spanQuantiles(sorted, ColSpec.default, maxRows)
+    assert(q.exists(_._2 > binSize * 8), s"p99 misses the sorted tail: $q")
+  }
+
   // ---- bed12 validator null-guard (ADVICE r4, io/bed.py:127-475) ----
 
   test("bed12: blockStarts with missing or malformed blockSizes is a " +
@@ -534,13 +548,25 @@ class GoldenSpec extends SparkSpec {
     val cover = Seq(("chr1", 2L, 8L), ("chr1", 4L, 12L), ("chr1", 12L, 20L),
       ("chr1", 25L, 40L), ("chr1", 25L, 25L))
       .toDF("chrom", "start", "end")
-    val byPairs = rowsOf(Ops.coverage(probes, cover, binSize = 4,
-      rankScan = Some(false)), "chrom", "start", "end", "coverage")
-    val byScan = rowsOf(Ops.coverage(probes, cover, binSize = 4,
-      rankScan = Some(true)), "chrom", "start", "end", "coverage")
+    val withId = probes.withColumn("__id", monotonically_increasing_id())
+      .persist()
+    val probeOf = withId.collect()
+      .map(r => r.getAs[Long]("__id") -> r.toSeq.take(3)).toMap
+    // both regimes return (probe id, covered bp); an absent probe reads 0,
+    // the fill coverage applies
+    def byProbe(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Long] = {
+      val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      probeOf.map { case (id, p) => p -> m.getOrElse(id, 0L) }
+    }
+    val c = ColSpec.default
+    val byPairs = byProbe(Ops.coveredBpByPairs(withId, "__id", cover,
+      "coverage", c, c, 4, IntervalJoin.Auto))
+    val byScan = byProbe(Ops.coveredBpByRank(withId, "__id", cover,
+      "coverage", c, c, 4))
     assert(byPairs == byScan)
     // [0,30): runs [2,20) and [25,40) clip to 18 + 5 = 23
-    assert(byPairs.exists(r => r(1) == 0L && r(3) == 23L))
+    assert(byPairs(Seq("chr1", 0L, 30L)) == 23L)
+    withId.unpersist()
   }
 
   test("coverage with custom column names on both sides " +

@@ -1097,4 +1097,18 @@ class StreamingSpec extends SparkSpec {
       .as[Long].collect().sorted.toSeq
     assert(ids == ((0L until 30L) ++ (200L until 210L)).sorted.toSeq)
   }
+
+  test("ingest tail: when two concurrent writers fail, both errors " +
+    "surface (the first thrown, the other suppressed on it)") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger()
+    val e = intercept[RuntimeException] {
+      StreamOps.runTail(Seq(
+        () => throw new RuntimeException("profile writer failed"),
+        () => { ran.incrementAndGet(); () },
+        () => throw new IllegalStateException("sketch writer failed")))
+    }
+    val msgs = (e +: e.getSuppressed.toSeq).map(_.getMessage).toSet
+    assert(msgs == Set("profile writer failed", "sketch writer failed"))
+    assert(ran.get == 1, "the healthy writer must still run")
+  }
 }

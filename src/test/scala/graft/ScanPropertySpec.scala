@@ -43,7 +43,7 @@ class ScanPropertySpec extends SparkSpec {
       val ord = Seq(col("k").asc, col("id").asc)
       val base = data.toDF("id", "g", "k", "v")
         .withColumn("__b", Scan.bucketOf(col("k"), width))
-      val out = Scan.prefixSum2(
+      val out = Scan.prefixSumN(
         Scan.prefixMax(
           Scan.prefixMax(
             Scan.prefixSum(
@@ -52,7 +52,7 @@ class ScanPropertySpec extends SparkSpec {
               Seq("g"), "__b", ord, col("v"), inclusive = false, "s_ex"),
             Seq("g"), "__b", ord, col("v"), inclusive = true, "m_in"),
           Seq("g"), "__b", ord, col("v"), inclusive = false, "m_ex"),
-        Seq("g"), "__b", ord, col("v"), col("v") * 2, "n1", "n2")
+        Seq("g"), "__b", ord, Seq(col("v") -> "n1", (col("v") * 2) -> "n2"))
       val got = out.collect().map { r =>
         r.getAs[Long]("id") -> ((r.getAs[Long]("s_in"), r.getAs[Long]("s_ex"),
           Option(r.getAs[Any]("m_in")), Option(r.getAs[Any]("m_ex")),
